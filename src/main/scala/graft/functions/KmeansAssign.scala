@@ -25,14 +25,19 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, FloatT
   * dimension drop (the dim equi-join behavior), null elements
   * contribute nothing (SQL sum semantics), and the argmin tie-breaks to
   * the LOWEST cluster id on exact integers (the `orderBy(dist, cl)`
-  * row_number contract). Returns `array(cl, dist)` as ARRAY<LONG>;
-  * null for a null or EMPTY embedding (an empty vector had no long-form
-  * rows, so it vanished from the assignment — callers filter nulls).
+  * row_number contract). `live` marks the centroid cells that exist:
+  * a dead cell (no long-form row, or a NULL centroid) adds no term, and
+  * a cluster with no live cell is no candidate — it had no rows to join.
+  * Returns `array(cl, dist)` as ARRAY<LONG>; null for a null or EMPTY
+  * embedding (an empty vector had no long-form rows, so it vanished
+  * from the assignment — callers filter nulls) and when no cluster is
+  * live.
   */
 case class KmeansAssignExpr(child: Expression, cents: Seq[Double],
-    k: Int, dim: Int, quantum: Double)
+    live: Seq[Boolean], k: Int, dim: Int, quantum: Double)
     extends UnaryExpression with ExpectsInputTypes {
-  require(cents.length == k * dim, s"need k*dim=${k * dim} centroid cells")
+  require(cents.length == k * dim && live.length == k * dim,
+    s"need k*dim=${k * dim} centroid cells")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -42,33 +47,40 @@ case class KmeansAssignExpr(child: Expression, cents: Seq[Double],
   override def prettyName: String = "kmeans_assign"
 
   @transient private lazy val cArr: Array[Double] = cents.toArray
+  @transient private lazy val liveArr: Array[Boolean] = live.toArray
+  @transient private lazy val clLive: Array[Boolean] =
+    Array.tabulate(k)(cl => live.slice(cl * dim, (cl + 1) * dim).contains(true))
 
   override def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     if (x.numElements() == 0) return null
     val len = math.min(x.numElements(), dim)
-    var bestCl = 0L
+    var bestCl = -1L
     var bestDist = Long.MaxValue
     var cl = 0
     while (cl < k) {
-      var dist = 0L
-      var i = 0
-      while (i < len) {
-        if (!x.isNullAt(i)) {
-          val d = x.getFloat(i).toDouble - cArr(cl * dim + i)
-          dist += math.floor(d * d * quantum).toLong
+      if (clLive(cl)) {
+        var dist = 0L
+        var i = 0
+        while (i < len) {
+          if (liveArr(cl * dim + i) && !x.isNullAt(i)) {
+            val d = x.getFloat(i).toDouble - cArr(cl * dim + i)
+            dist += math.floor(d * d * quantum).toLong
+          }
+          i += 1
         }
-        i += 1
+        if (bestCl < 0 || dist < bestDist) { bestDist = dist; bestCl = cl.toLong }
       }
-      if (dist < bestDist) { bestDist = dist; bestCl = cl.toLong }
       cl += 1
     }
-    new GenericArrayData(Array(bestCl, bestDist))
+    if (bestCl < 0) null else new GenericArrayData(Array(bestCl, bestDist))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a => {
       val cs = ctx.addReferenceObj("cents", cArr, "double[]")
+      val lv = ctx.addReferenceObj("live", liveArr, "boolean[]")
+      val cv = ctx.addReferenceObj("clLive", clLive, "boolean[]")
       val len = ctx.freshName("len")
       val bc = ctx.freshName("bestCl"); val bd = ctx.freshName("bestDist")
       val cl = ctx.freshName("cl"); val i = ctx.freshName("i")
@@ -78,18 +90,23 @@ case class KmeansAssignExpr(child: Expression, cents: Seq[Double],
          |  ${ev.isNull} = true;
          |} else {
          |  int $len = java.lang.Math.min($a.numElements(), $dim);
-         |  long $bc = 0L; long $bd = Long.MAX_VALUE;
+         |  long $bc = -1L; long $bd = Long.MAX_VALUE;
          |  for (int $cl = 0; $cl < $k; $cl++) {
+         |    if (!$cv[$cl]) continue;
          |    long $dist = 0L;
          |    for (int $i = 0; $i < $len; $i++) {
-         |      if (!$a.isNullAt($i)) {
+         |      if ($lv[$cl * $dim + $i] && !$a.isNullAt($i)) {
          |        double $d = ((double) $a.getFloat($i)) - $cs[$cl * $dim + $i];
          |        $dist += (long) java.lang.Math.floor($d * $d * $quantum);
          |      }
          |    }
-         |    if ($dist < $bd) { $bd = $dist; $bc = (long) $cl; }
+         |    if ($bc < 0L || $dist < $bd) { $bd = $dist; $bc = (long) $cl; }
          |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[]{$bc, $bd});
+         |  if ($bc < 0L) {
+         |    ${ev.isNull} = true;
+         |  } else {
+         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[]{$bc, $bd});
+         |  }
          |}
        """.stripMargin
     })
@@ -100,8 +117,8 @@ case class KmeansAssignExpr(child: Expression, cents: Seq[Double],
 
 object KmeansAssignExpr {
   /** Column API: `array(best_cluster, quantized_distance)` (LONGs). */
-  def apply(embedding: Column, cents: Seq[Double], k: Int, dim: Int,
-      quantum: Double): Column =
+  def apply(embedding: Column, cents: Seq[Double], live: Seq[Boolean],
+      k: Int, dim: Int, quantum: Double): Column =
     ExpressionUtils.column(KmeansAssignExpr(
-      ExpressionUtils.expression(embedding), cents, k, dim, quantum))
+      ExpressionUtils.expression(embedding), cents, live, k, dim, quantum))
 }

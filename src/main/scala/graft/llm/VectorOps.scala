@@ -635,18 +635,7 @@ object VectorOps {
       // floors every (x−c)²·q term before its exact LONG sum and
       // tie-breaks to the lowest cluster id — bit-identical to the
       // aggregate+window it replaces (the DuckDB oracle re-proves it).
-      val cRows = cent.collect()
-      val cArr = new Array[Double](KmeansK * 64)
-      cRows.foreach { r =>
-        cArr(r.getLong(0).toInt * 64 + r.getInt(1)) = r.getDouble(2)
-      }
-      assign = emb
-        .select(col("vec_id"),
-          org.apache.spark.sql.graft.KmeansAssignExpr(
-            col("embedding"), cArr.toSeq, KmeansK, 64, Quantum).as("a"))
-        .where(col("a").isNotNull)
-        .select(col("vec_id"), col("a").getItem(0).as("cl"),
-          col("a").getItem(1).as("dist"))
+      assign = kmeansAssign(emb, cent, KmeansK)
         .localCheckpoint(eager = false)
       cent = assign.join(flat, "vec_id")
         .groupBy(col("cl"), col("dim"))
@@ -657,6 +646,36 @@ object VectorOps {
       .agg(count(lit(1)).as("n"),
         Det.r4(sum(col("dist")).cast("double") / q).as("inertia"))
       .orderBy("cl")
+  }
+
+  /** One assignment round of [[kmeansClusters]]: collects the long-form
+    * centroid table `cent` (cl, dim, c) and assigns every `emb`
+    * (vec_id, embedding) row to its nearest cluster in one
+    * KmeansAssignExpr pass → (vec_id, cl, dist). Mirrors the long-form
+    * `flat ⋈ cent USING (dim)` round of the oracle: a (cl, dim) cell with
+    * no row or a NULL centroid adds no term, a cluster with no non-NULL
+    * cell is no candidate (it never joins), and the dimension is the
+    * table's own (embedding elements beyond it drop). */
+  private[graft] def kmeansAssign(emb: DataFrame, cent: DataFrame,
+      k: Int): DataFrame = {
+    val cRows = cent.collect()
+    val dim = if (cRows.isEmpty) 0 else cRows.map(_.getInt(1)).max + 1
+    val cArr = new Array[Double](k * dim)
+    val live = new Array[Boolean](k * dim)
+    cRows.foreach { r =>
+      if (!r.isNullAt(2)) {
+        val cell = r.getLong(0).toInt * dim + r.getInt(1)
+        cArr(cell) = r.getDouble(2)
+        live(cell) = true
+      }
+    }
+    emb
+      .select(col("vec_id"),
+        org.apache.spark.sql.graft.KmeansAssignExpr(
+          col("embedding"), cArr.toSeq, live.toSeq, k, dim, Quantum).as("a"))
+      .where(col("a").isNotNull)
+      .select(col("vec_id"), col("a").getItem(0).as("cl"),
+        col("a").getItem(1).as("dist"))
   }
 
   private val KmParMaxIters = 12

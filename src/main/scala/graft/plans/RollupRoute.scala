@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StructType, TimestampType}
 
 /** Plan-level rollup routing — the one piece of Kenshin's read path that
   * Catalyst cannot learn on its own (SURVEY §4.1): that `rollup_1h` is
@@ -112,24 +112,34 @@ object RollupCatalog {
 
   /** Register a rollup BY ITS TABLE PATH — the persistable form a
     * serving fleet uses: the plan is rebuilt from the path, so the
-    * registration can be [[save]]d and [[load]]ed by other sessions. */
+    * registration can be [[save]]d and [[load]]ed by other sessions.
+    *
+    * `rollupSchema`, when the caller knows it (a writer that just wrote
+    * the table), is handed to the reader, so registration only lists
+    * the files and runs no parquet schema-inference job. None (the
+    * default) infers it from the footers; [[load]] always does, since a
+    * saved catalog carries no schema. Either way the persisted entry is
+    * the same. */
   def registerTable(spark: org.apache.spark.sql.SparkSession,
       rawPath: String, rollupPath: String,
       completeUntilMicros: Option[Long] = None,
       appendRollup: Boolean = false,
-      datePartitioned: Boolean = false): Unit =
+      datePartitioned: Boolean = false,
+      rollupSchema: Option[StructType] = None): Unit =
     registerTablePaths(spark, Seq(rawPath), rollupPath, completeUntilMicros,
-      appendRollup, datePartitioned)
+      appendRollup, datePartitioned, rollupSchema)
 
   /** Multi-path variant of [[registerTable]] (see [[registerPaths]]). */
   def registerTablePaths(spark: org.apache.spark.sql.SparkSession,
       rawPaths: Seq[String], rollupPath: String,
       completeUntilMicros: Option[Long] = None,
       appendRollup: Boolean = false,
-      datePartitioned: Boolean = false): Unit = {
+      datePartitioned: Boolean = false,
+      rollupSchema: Option[StructType] = None): Unit = {
     require(rawPaths.forall(!_.contains(PathSep)),
       s"raw paths must not contain '$PathSep' (catalog TSV separator)")
-    registerPaths(rawPaths, spark.read.parquet(rollupPath),
+    val reader = rollupSchema.fold(spark.read)(spark.read.schema)
+    registerPaths(rawPaths, reader.parquet(rollupPath),
       completeUntilMicros, appendRollup, datePartitioned)
     val n = pathSet(rawPaths)
     tableEntries =

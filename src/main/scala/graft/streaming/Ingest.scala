@@ -2049,41 +2049,61 @@ object Ingest {
       .write.mode("append").parquet(outDir)
   }
 
+  /** Hourly PARTIALS of a points frame (metric, ts, value) in the
+    * routing-compatible append-mode shape (metric, bucket, sum_v DECIMAL,
+    * n, min_v, max_v) — what [[liveRollupWriter]] appends per batch. */
+  def hourlyPartials(points: DataFrame): DataFrame =
+    points
+      .groupBy(col("metric"), date_trunc("hour", col("ts")).as("bucket"))
+      .agg(sum(col("value").cast("decimal(18,4)")).as("sum_v"),
+        count(lit(1)).as("n"), min(col("value")).as("min_v"),
+        max(col("value")).as("max_v"))
+
   /** The LIVE writer loop, routing-integrated (R11 + SURVEY §8.3
-    * freshness): every micro-batch appends hourly PARTIALS in the
-    * routing-compatible shape (metric, bucket, sum_v DECIMAL(18,4), n,
-    * min_v, max_v) and then re-registers the raw table with the
-    * advanced frontier, so concurrent batch reads route the folded
-    * interior from the rollup and scan only the still-filling tail raw.
-    * A bucket touched by several batches holds several partial rows —
-    * the registration is append-mode, every routed read re-aggregates
+    * freshness): every micro-batch appends [[hourlyPartials]] to
+    * `rollupDir` and then re-registers the raw table with the advanced
+    * frontier, so concurrent batch reads route the folded interior from
+    * the rollup and scan only the still-filling tail raw. A bucket
+    * touched by several batches holds several partial rows — the
+    * registration is append-mode, every routed read re-aggregates
     * exactly, and `graft.io.Layout.compact` can later fold the partials.
+    *
+    * ONE write per batch (AQE runs it as two jobs: the aggregate's
+    * shuffle, then the write) and nothing else: the batch's max event
+    * time is an [[org.apache.spark.sql.Observation]] on the aggregate's
+    * input, so it comes out of the write itself (no emptiness probe, no
+    * separate max job), and the re-registration hands the catalog the
+    * schema just written, so it skips parquet schema inference.
     *
     * The frontier is the max event time folded so far + 1µs, correct
     * when the upstream delivers in event-time order (pair with a
     * watermark + late-drop otherwise — a late point behind the frontier
     * would land in a bucket reads no longer scan raw). The frontier
     * only ADVANCES (monotone max), so a batch of old replayed data
-    * cannot regress it. */
+    * cannot regress it.
+    *
+    * An EMPTY batch (e.g. an all-malformed micro-batch upstream) still
+    * runs the write, which appends one schema-only part file (no rows,
+    * so reads are unchanged); its observation carries no max (AQE prunes
+    * the metrics node: the key is absent, not null), so the frontier
+    * stays put and the table is not re-registered. */
   def liveRollupWriter(spark: org.apache.spark.sql.SparkSession,
       rawPath: String, rollupDir: String)
       : (DataFrame, Long) => Unit = {
     val frontier = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     (batch: DataFrame, _: Long) => {
-      if (!batch.isEmpty) {
-        batch
-          .groupBy(col("metric"), date_trunc("hour", col("ts")).as("bucket"))
-          .agg(sum(col("value").cast("decimal(18,4)")).as("sum_v"),
-            count(lit(1)).as("n"), min(col("value")).as("min_v"),
-            max(col("value")).as("max_v"))
-          .write.mode("append").parquet(rollupDir)
-        val mx = batch.agg(max(expr("unix_micros(ts)"))).head
-        if (!mx.isNullAt(0)) {
-          val f = math.max(frontier.get, mx.getLong(0) + 1L)
+      val obs = org.apache.spark.sql.Observation()
+      val partials = hourlyPartials(
+        batch.observe(obs, max(expr("unix_micros(ts)")).as("mx")))
+      partials.write.mode("append").parquet(rollupDir)
+      obs.get.get("mx") match {
+        case Some(mx: Long) =>
+          val f = math.max(frontier.get, mx + 1L)
           frontier.set(f)
           graft.plans.RollupCatalog.registerTable(spark, rawPath,
-            rollupDir, Some(f), appendRollup = true)
-        }
+            rollupDir, Some(f), appendRollup = true,
+            rollupSchema = Some(partials.schema))
+        case _ => () // empty batch: absent (or null) max
       }
     }
   }

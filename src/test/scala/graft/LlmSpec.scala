@@ -461,6 +461,47 @@ class LlmSpec extends AnyFunSuite {
     assert(rows.forall(r => r.getLong(1) < total * 9 / 10))
   }
 
+  test("kmeans assignment skips empty clusters and NULL centroid cells") {
+    import org.apache.spark.sql.expressions.Window
+    val sp = spark
+    import sp.implicits._
+    // planted 2-d round: cluster 1 has NO centroid rows (read as a zero
+    // vector it would win every near-origin argmin), cluster 2 has a
+    // NULL cell, cluster 3 only NULL cells
+    val emb = Seq((0L, Array(0.1f, 0.1f)), (1L, Array(0.2f, -0.1f)),
+      (2L, Array(5.0f, 5.0f)), (3L, Array(4.0f, -9.0f)))
+      .toDF("vec_id", "embedding")
+    val cent = Seq[(Long, Int, Option[Double])]((0L, 0, Some(1.0)),
+      (0L, 1, Some(1.0)), (2L, 0, Some(5.0)), (2L, 1, None),
+      (3L, 0, None), (3L, 1, None)).toDF("cl", "dim", "c")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vec_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    // a local relation evaluates the kernel interpreted on the driver;
+    // behind a shuffle it runs the generated code
+    val got = rows(VectorOps.kmeansAssign(emb, cent, 4))
+    assert(rows(VectorOps.kmeansAssign(emb.repartition(2), cent, 4)) == got,
+      "codegen and interpreted kernels must agree")
+    // the oracle's long-form round: NULL terms drop from the sum, a
+    // cluster that never joins is no candidate, and DuckDB orders the
+    // all-NULL distance last
+    val q = lit(1.0e12)
+    val ref = emb
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "xf")))
+      .select(col("vec_id"), col("dim"), col("xf").cast("double").as("x"))
+      .join(cent, "dim")
+      .groupBy(col("vec_id"), col("cl"))
+      .agg(sum(floor((col("x") - col("c")) * (col("x") - col("c")) * q))
+        .cast("long").as("dist"))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
+        .orderBy(col("dist").asc_nulls_last, col("cl"))))
+      .where(col("rn") === 1)
+      .select("vec_id", "cl", "dist")
+    assert(got == rows(ref))
+    assert(got.map(_._2) == Seq(0L, 0L, 2L, 2L),
+      s"empty or all-NULL clusters must never win: $got")
+  }
+
   test("semdedup_clustered: every pruned pair passes the exact integer test") {
     val sp = spark
     import sp.implicits._

@@ -1288,69 +1288,210 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows(3) == ((4L, false, -1L)), "audio passes through unflagged")
   }
 
-  test("s_live_rollup: mid-stream reads route with a moving frontier") {
+  // --- live rollup writer fixtures (s_live_rollup*) ---
+
+  private def pt(m: String, t: String, v: Double) = Point(m, ts(t), v)
+  private val liveBatch1 = Seq(
+    pt("m", "2024-01-01 10:00:05", 1.0), pt("m", "2024-01-01 10:20:00", 3.0),
+    pt("m", "2024-01-01 11:10:00", 5.0), pt("k", "2024-01-01 10:30:00", 2.0))
+  private val liveBatch2 = Seq(
+    pt("m", "2024-01-01 11:40:00", 7.0), pt("k", "2024-01-01 11:45:00", 4.0),
+    pt("m", "2024-01-01 12:05:00", 9.0))
+  private def micros(p: Point) = p.ts.getTime * 1000L
+
+  /** Runs `body(rawPath, rollupDir)` on fresh temp paths with
+    * RollupRouteRule on; the catalog and the rule are reset after. */
+  private def withLiveRollup(body: (String, String) => Unit): Unit = {
     import graft.plans.{RollupCatalog, RollupRouteRule}
     val sp = spark
-    import sp.implicits._
-    implicit val sq: org.apache.spark.sql.SQLContext = sp.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_live").toString
-    val rawPath = s"$dir/points"
-    val rollupDir = s"$dir/rollup_live"
-    def pt(m: String, t: String, v: Double) = Point(m, ts(t), v)
-    val batch1 = Seq(
-      pt("m", "2024-01-01 10:00:05", 1.0), pt("m", "2024-01-01 10:20:00", 3.0),
-      pt("m", "2024-01-01 11:10:00", 5.0), pt("k", "2024-01-01 10:30:00", 2.0))
-    val batch2 = Seq(
-      pt("m", "2024-01-01 11:40:00", 7.0), pt("k", "2024-01-01 11:45:00", 4.0),
-      pt("m", "2024-01-01 12:05:00", 9.0))
-    // the raw table a concurrent reader sees (at production: the same
-    // append sink the raw writer maintains)
-    sp.createDataset(batch1 ++ batch2).toDF().write.parquet(rawPath)
     sp.experimental.extraOptimizations =
       sp.experimental.extraOptimizations :+ RollupRouteRule
-    val in = MemoryStream[Point]
-    val q = in.toDF().writeStream
-      .foreachBatch(Ingest.liveRollupWriter(sp, rawPath, rollupDir))
-      .outputMode("append").start()
-    def read() = sp.read.parquet(rawPath)
-      .groupBy(col("metric"), date_trunc("hour", col("ts")).as("bucket"))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_v"))
-      .orderBy("metric", "bucket")
-    def assertExact(desc: String): Unit = {
-      val routed = read()
-      val plan = routed.queryExecution.executedPlan.toString
-      assert(plan.contains("rollup_live") && plan.contains("/points") &&
-        plan.contains("Union"),
-        s"$desc should route interior + raw tail:\n$plan")
-      val got = routed.collect()
-      // the next writer batch re-registers, so clearing here only
-      // affects the unrouted control read
-      RollupCatalog.clear()
-      val expect = read().collect()
-      assert(got.length == expect.length && got.nonEmpty, desc)
-      got.zip(expect).foreach { case (g, e) =>
-        assert(g.getString(0) == e.getString(0) &&
-          g.getTimestamp(1) == e.getTimestamp(1) &&
-          g.getLong(2) == e.getLong(2), s"$desc: $g vs $e")
-        assert(math.abs(g.getDouble(3) - e.getDouble(3)) < 1e-9, desc)
-      }
-    }
-    try {
-      in.addData(batch1: _*)
-      q.processAllAvailable()
-      // frontier = 11:10:00.000001 → floor 11:00: bucket 10:00 routes
-      // from the rollup, 11:00 (incomplete) reads raw
-      assertExact("after batch 1")
-      in.addData(batch2: _*)
-      q.processAllAvailable()
-      // frontier floor 12:00: 10:00 + 11:00 (two partial rows, folded
-      // across batches) route; 12:00 reads raw
-      assertExact("after batch 2")
-    } finally {
-      q.stop()
+    try body(s"$dir/points", s"$dir/rollup_live")
+    finally {
       RollupCatalog.clear()
       sp.experimental.extraOptimizations =
         sp.experimental.extraOptimizations.filterNot(_ == RollupRouteRule)
+    }
+  }
+
+  private def hourlyRead(rawPath: String) = spark.read.parquet(rawPath)
+    .groupBy(col("metric"), date_trunc("hour", col("ts")).as("bucket"))
+    .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_v"))
+    .orderBy("metric", "bucket")
+
+  /** The routed hourly read must route (rollup interior + raw tail) and
+    * equal the same read with RollupRouteRule off. */
+  private def assertRoutedExact(rawPath: String, desc: String): Unit = {
+    import graft.plans.RollupRouteRule
+    val sp = spark
+    val routed = hourlyRead(rawPath)
+    val plan = routed.queryExecution.executedPlan.toString
+    assert(plan.contains("rollup_live") && plan.contains("/points") &&
+      plan.contains("Union"),
+      s"$desc should route interior + raw tail:\n$plan")
+    val got = routed.collect()
+    val rules = sp.experimental.extraOptimizations
+    sp.experimental.extraOptimizations = rules.filterNot(_ == RollupRouteRule)
+    val expect = try hourlyRead(rawPath).collect()
+      finally sp.experimental.extraOptimizations = rules
+    assert(got.length == expect.length && got.nonEmpty, desc)
+    got.zip(expect).foreach { case (g, e) =>
+      assert(g.getString(0) == e.getString(0) &&
+        g.getTimestamp(1) == e.getTimestamp(1) &&
+        g.getLong(2) == e.getLong(2), s"$desc: $g vs $e")
+      assert(math.abs(g.getDouble(3) - e.getDouble(3)) < 1e-9, desc)
+    }
+  }
+
+  /** The registered frontier of `rawPath`, read back through the
+    * persisted catalog form. */
+  private def frontierOf(rawPath: String): Option[Long] = {
+    val f = java.io.File.createTempFile("graft_catalog", ".tsv")
+    graft.plans.RollupCatalog.save(spark, f.getPath)
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().map(_.split("\t", -1))
+      .collectFirst { case c if c(0).endsWith("/points") => c(2) }
+      .filter(_.nonEmpty).map(_.toLong)
+    finally { src.close(); f.delete() }
+  }
+
+  /** foreachBatch body: raw append (the concurrent reader's table), then
+    * the live rollup writer — the production pairing. */
+  private def rawThenRollup(rawPath: String, rollupDir: String)
+      : (org.apache.spark.sql.DataFrame, Long) => Unit = {
+    val writer = Ingest.liveRollupWriter(spark, rawPath, rollupDir)
+    (batch, id) => {
+      batch.write.mode("append").parquet(rawPath)
+      writer(batch, id)
+    }
+  }
+
+  test("s_live_rollup: mid-stream reads route with a moving frontier") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = sp.sqlContext
+    withLiveRollup { (rawPath, rollupDir) =>
+      // the raw table a concurrent reader sees (at production: the same
+      // append sink the raw writer maintains)
+      sp.createDataset(liveBatch1 ++ liveBatch2).toDF().write.parquet(rawPath)
+      val in = MemoryStream[Point]
+      val q = in.toDF().writeStream
+        .foreachBatch(Ingest.liveRollupWriter(sp, rawPath, rollupDir))
+        .outputMode("append").start()
+      try {
+        in.addData(liveBatch1: _*)
+        q.processAllAvailable()
+        // frontier = 11:10:00.000001 → floor 11:00: bucket 10:00 routes
+        // from the rollup, 11:00 (incomplete) reads raw
+        assertRoutedExact(rawPath, "after batch 1")
+        in.addData(liveBatch2: _*)
+        q.processAllAvailable()
+        // frontier floor 12:00: 10:00 + 11:00 (two partial rows, folded
+        // across batches) route; 12:00 reads raw
+        assertRoutedExact(rawPath, "after batch 2")
+      } finally q.stop()
+    }
+  }
+
+  test("s_live_rollup_empty_batch: an all-malformed batch keeps the frontier") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = sp.sqlContext
+    def line(p: Point) = s"${p.metric} ${p.value} ${p.ts.getTime / 1000L}"
+    withLiveRollup { (rawPath, rollupDir) =>
+      val write = rawThenRollup(rawPath, rollupDir)
+      val in = MemoryStream[String]
+      val q = Ingest.parseLinesQuarantine(in.toDF()).writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          write(batch.where(col("reason") === "ok")
+            .select("metric", "ts", "value"), id)
+        }.start()
+      try {
+        in.addData(liveBatch1.map(line): _*)
+        q.processAllAvailable()
+        val f1 = frontierOf(rawPath)
+        assert(f1 == Some(liveBatch1.map(micros).max + 1L))
+        assertRoutedExact(rawPath, "after batch 1")
+        // the writer sees an EMPTY ok frame: no throw, no advance
+        in.addData("garbage", "cpu.load NaNope 1700000120", "a b c d")
+        q.processAllAvailable()
+        assert(q.exception.isEmpty)
+        assert(frontierOf(rawPath) == f1, "an empty batch must not move it")
+        assertRoutedExact(rawPath, "after the all-malformed batch")
+        in.addData(liveBatch2.map(line): _*)
+        q.processAllAvailable()
+        assert(frontierOf(rawPath) == Some(liveBatch2.map(micros).max + 1L))
+        assertRoutedExact(rawPath, "after batch 3")
+      } finally q.stop()
+    }
+  }
+
+  test("s_live_rollup_replay: an old replayed batch never regresses the frontier") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = sp.sqlContext
+    withLiveRollup { (rawPath, rollupDir) =>
+      val in = MemoryStream[Point]
+      val q = in.toDF().writeStream
+        .foreachBatch(rawThenRollup(rawPath, rollupDir))
+        .outputMode("append").start()
+      try {
+        in.addData(liveBatch1: _*)
+        q.processAllAvailable()
+        in.addData(liveBatch2: _*)
+        q.processAllAvailable()
+        val f2 = frontierOf(rawPath)
+        assert(f2 == Some(liveBatch2.map(micros).max + 1L))
+        assertRoutedExact(rawPath, "after batch 2")
+        // a replay of points behind the frontier (both already-complete
+        // buckets): raw and rollup both take them, the frontier holds
+        in.addData(pt("m", "2024-01-01 10:40:00", 11.0),
+          pt("k", "2024-01-01 11:05:00", 6.0))
+        q.processAllAvailable()
+        assert(frontierOf(rawPath) == f2, "the frontier must not regress")
+        assertRoutedExact(rawPath, "after the replay")
+      } finally q.stop()
+    }
+  }
+
+  test("s_live_rollup_jobs: a writer call runs no more jobs than its partials write") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sp = spark
+    import sp.implicits._
+    def jobsOf(body: => Unit): Int = {
+      val sc = sp.sparkContext
+      val group = s"live-rollup-jobs-${System.nanoTime()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "job count")
+      try body
+      finally {
+        sc.clearJobGroup()
+        org.apache.spark.TestListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      n.get
+    }
+    withLiveRollup { (rawPath, rollupDir) =>
+      sp.createDataset(liveBatch1).toDF().write.parquet(rawPath)
+      // a scanned batch, as a micro-batch is: a local relation would
+      // answer an emptiness probe or a max on the driver without a job
+      val batch = sp.read.parquet(rawPath)
+      val writer = Ingest.liveRollupWriter(sp, rawPath, rollupDir)
+      val writerJobs = jobsOf(writer(batch, 0L))
+      val plainJobs = jobsOf(Ingest.hourlyPartials(batch)
+        .write.mode("append").parquet(s"$rollupDir-plain"))
+      // no emptiness probe, no separate max job, no schema inference
+      assert(writerJobs >= 1 && writerJobs <= plainJobs,
+        s"writer ran $writerJobs jobs, a plain partials write $plainJobs")
+      assert(frontierOf(rawPath) == Some(liveBatch1.map(micros).max + 1L))
     }
   }
 
