@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints one per-query JSON line, optional diagnostic
   * lines, then a SHORT `{"metric":"total",...}` summary as the FINAL
@@ -32,13 +31,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // absorb JVM/codegen/session warmup so the first timed query isn't
     // charged ~5s of one-time cost (it isn't query work): an in-memory
@@ -115,12 +108,17 @@ object Bench {
     val canonical = only.isEmpty && canonicalSf
     // committed per-query reference (keyed by name, so usable for the
     // adaptive-pass noise band even on a BENCH_ONLY subset) — loaded
-    // from the COMMITTED sidecar before this run can touch it
+    // from the COMMITTED sidecar of this cpu count before this run can
+    // touch it: BENCH_FULL_latest.json is the 32-cpu anchor, any other
+    // count reads BENCH_FULL_c<cpus>.json and has no reference without
+    // one
+    val anchorFile =
+      if (cpus == "32") "BENCH_FULL_latest.json" else s"BENCH_FULL_c$cpus.json"
     val sidecar: Map[String, Double] =
       if (!canonicalSf) Map.empty
       else try {
         val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_FULL_latest.json")), "UTF-8")
+          java.nio.file.Paths.get(anchorFile)), "UTF-8")
         val qIdx = txt.indexOf("\"queries\":{")
         if (qIdx < 0) Map.empty
         else {
@@ -314,8 +312,7 @@ object Bench {
     // 32-cpu run may promote BENCH_FULL_latest.json; other cpu counts
     // get their own per-cpu sidecar.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      if (canonical && sane && cpus == "32") "BENCH_FULL_latest.json"
-      else if (canonical && sane) s"BENCH_FULL_c$cpus.json"
+      if (canonical && sane) anchorFile
       else if (canonical) "BENCH_FULL_suspect.json"
       else "")
     if (outPath.nonEmpty)

@@ -1,10 +1,10 @@
 package graft.llm
 
-import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.CosineSim
 import graft.io.Tables
+import graft.util.SessionMemo
 
 /** Session-scoped IVF index registry — the "build once, probe per query"
   * lifecycle a real ANN deployment needs (SURVEY §8.3). Rebuilding the
@@ -63,88 +63,53 @@ object AnnIndex {
     * fidelity than PQ's shared codewords). */
   final case class SqIndex(cells: DataFrame, codes: DataFrame, sq: Sq)
 
-  private val registry = TrieMap.empty[String, Index]
-  private val order = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  private val pqRegistry = TrieMap.empty[String, PqIndex]
-  private val pqOrder = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  private val sqRegistry = TrieMap.empty[String, SqIndex]
-  private val sqOrder = new java.util.concurrent.ConcurrentLinkedQueue[String]
-
   /** Deterministic sample bound for quantizer training (see class doc). */
   private val SampleCap = 4096
   private val LloydIters = 5
 
-  /** Cached indexes are bounded: each holds a localCheckpointed lists
-    * table on executor storage, so an unbounded registry would retain a
-    * reference for every corpus ever probed. Oldest-inserted evicts —
-    * eviction drops the REFERENCE only (callers may still hold the
-    * evicted Index, so no eager unpersist); the checkpoint blocks are
-    * reclaimed by the ContextCleaner once unreachable. */
-  private val MaxCached = 8
+  /** Memo key of the flat index; the PQ/SQ/OPQ variants extend it. */
+  private def indexKey(k: Int, replicas: Int) = s"ann|k=$k|r=$replicas"
 
-  /** Build the index for a corpus once per session; subsequent calls are
-    * a map lookup. Keyed by (Spark session, corpus, k, replicas) — the
-    * sessionUUID component keeps a second session in the same application
-    * from receiving Dataset plans bound to the builder session's conf
-    * (timezone, shuffle partitions). Synchronized:
-    * builds are rare and heavyweight, and serializing them keeps
-    * `order` exactly in step with the registry (a failed build must not
-    * leave a stale queue entry that would later evict a live index). */
+  private def vectors(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
+
+  /** One distributed encode pass over the built lists; the checkpointed
+    * result is the compact thing probes actually scan. */
+  private def encodeLists(base: Index, codes: Column): DataFrame =
+    base.lists.select(col("vec_id"), col("cell"), codes.as("codes"))
+      .localCheckpoint()
+
+  /** Build the index for a corpus once per session ([[SessionMemo]]:
+    * keyed by session, corpus version, k and replicas); subsequent calls
+    * are a map lookup. */
   def buildOrGet(spark: SparkSession, sfDir: String, k: Int,
-      replicas: Int): Index = synchronized {
-    // identityHashCode of the session: stable for a session's lifetime,
-    // distinct across sessions of one application (sessionUUID is not
-    // exposed on the classic SparkSession API)
-    val key = s"${spark.sparkContext.applicationId}" +
-      s"|s=${Integer.toHexString(System.identityHashCode(spark))}" +
-      s"|$sfDir|k=$k|r=$replicas"
-    registry.get(key) match {
-      case Some(idx) => idx
-      case None =>
-        val idx = build(spark, sfDir, k, replicas)
-        registry.put(key, idx)
-        order.add(key)
-        while (registry.size > MaxCached) {
-          Option(order.poll()).foreach(registry.remove)
-        }
-        idx
-    }
-  }
+      replicas: Int): Index =
+    SessionMemo.getOrBuild(spark, sfDir, indexKey(k, replicas))(
+      build(spark, sfDir, k, replicas))
 
   /** Health-triggered quantizer refresh — the drift guard of a serving
     * fleet: corpus drift shows up as CELL IMBALANCE (vectors pile into
     * cells whose centroids no longer fit the distribution), so when the
     * current index's max/avg list size exceeds `imbalanceBound`, its
-    * cached build is evicted and the quantizer retrains from a fresh
+    * cached build is invalidated and the quantizer retrains from a fresh
     * bounded sample. Returns the serving index plus whether a refresh
     * happened. The health probe is two aggregates over the lists table
     * — model-sized, never a corpus pass; with an unchanged corpus the
     * rebuild is deterministic (same sample → same centroids), so the
     * trigger mechanics are spec-able without synthetic drift. */
   def refreshIfDrifted(spark: SparkSession, sfDir: String, k: Int,
-      replicas: Int, imbalanceBound: Double): (Index, Boolean) =
-    synchronized {
-      val idx = buildOrGet(spark, sfDir, k, replicas)
-      val h = idx.lists.groupBy(col("cell")).agg(count(lit(1)).as("sz"))
-        .agg(max(col("sz")).cast("double").as("mx"),
-          (sum(col("sz")).cast("double") / count(lit(1))).as("avg"))
-        .collect()(0)
-      val imbalance = h.getDouble(0) / h.getDouble(1)
-      if (imbalance <= imbalanceBound) (idx, false)
-      else {
-        val key = s"${spark.sparkContext.applicationId}" +
-          s"|s=${Integer.toHexString(System.identityHashCode(spark))}" +
-          s"|$sfDir|k=$k|r=$replicas"
-        registry.remove(key)
-        order.remove(key)
-        (buildOrGet(spark, sfDir, k, replicas), true)
-      }
+      replicas: Int, imbalanceBound: Double): (Index, Boolean) = {
+    val idx = buildOrGet(spark, sfDir, k, replicas)
+    val h = idx.lists.groupBy(col("cell")).agg(count(lit(1)).as("sz"))
+      .agg(max(col("sz")).cast("double").as("mx"),
+        (sum(col("sz")).cast("double") / count(lit(1))).as("avg"))
+      .collect()(0)
+    val imbalance = h.getDouble(0) / h.getDouble(1)
+    if (imbalance <= imbalanceBound) (idx, false)
+    else {
+      SessionMemo.invalidate(spark, sfDir, indexKey(k, replicas))
+      (buildOrGet(spark, sfDir, k, replicas), true)
     }
-
-  /** For specs: drop every cached index. */
-  private[graft] def clear(): Unit = {
-    registry.clear(); order.clear(); pqRegistry.clear(); pqOrder.clear()
-    sqRegistry.clear(); sqOrder.clear()
   }
 
   /** PQ subspace count: 64-dim embeddings → 8 subspaces × 8 dims. */
@@ -153,37 +118,18 @@ object AnnIndex {
   /** Codewords per subspace (byte-addressable — the classic 256). */
   private val PqCodewords = 256
 
-  /** Build-or-get the IVF-PQ index for a corpus — same bounded registry
-    * discipline as [[buildOrGet]] (and it builds the flat index first,
-    * so the two share cells and the flat lists stay available as the
-    * re-rank oracle). */
+  /** Build-or-get the IVF-PQ index for a corpus — memoized like
+    * [[buildOrGet]] (and it builds the flat index first, so the two
+    * share cells and the flat lists stay available as the re-rank
+    * oracle). */
   def buildPqOrGet(spark: SparkSession, sfDir: String, k: Int,
-      replicas: Int, m: Int = PqSubspaces): PqIndex = synchronized {
-    val key = s"${spark.sparkContext.applicationId}" +
-      s"|s=${Integer.toHexString(System.identityHashCode(spark))}" +
-      s"|$sfDir|k=$k|r=$replicas|pq=$m"
-    pqRegistry.get(key) match {
-      case Some(idx) => idx
-      case None =>
-        val base = buildOrGet(spark, sfDir, k, replicas)
-        val e = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val pq = Pq(trainPq(boundedSample(e), m))
-        // one distributed encode pass over the already-built lists; the
-        // checkpointed result is the compact thing probes actually scan
-        val codes = base.lists.select(col("vec_id"), col("cell"),
-            graft.functions.PqEncode(col("embedding"), pq.codebooks)
-              .as("codes"))
-          .localCheckpoint()
-        val idx = PqIndex(base.cells, codes, pq)
-        pqRegistry.put(key, idx)
-        pqOrder.add(key)
-        while (pqRegistry.size > MaxCached) {
-          Option(pqOrder.poll()).foreach(pqRegistry.remove)
-        }
-        idx
+      replicas: Int, m: Int = PqSubspaces): PqIndex =
+    SessionMemo.getOrBuild(spark, sfDir, s"${indexKey(k, replicas)}|pq=$m") {
+      val base = buildOrGet(spark, sfDir, k, replicas)
+      val pq = Pq(trainPq(boundedSample(vectors(spark, sfDir)), m))
+      PqIndex(base.cells, encodeLists(base,
+        graft.functions.PqEncode(col("embedding"), pq.codebooks)), pq)
     }
-  }
 
   /** Per-dim min/max over the NORMALIZED bounded sample → uniform 8-bit
     * model. Values outside the training range clamp at encode time (the
@@ -212,33 +158,15 @@ object AnnIndex {
   /** Build-or-get the IVF-SQ8 index: same coarse cells as the flat
     * index, lists carry 1-byte-per-dim scalar-quantized codes — the
     * middle rung between flat float lists and PQ (4× payload reduction,
-    * per-dimension resolution retained). Same bounded registry
-    * discipline as [[buildPqOrGet]]. */
+    * per-dimension resolution retained). Memoized like [[buildPqOrGet]]. */
   def buildSqOrGet(spark: SparkSession, sfDir: String, k: Int,
-      replicas: Int): SqIndex = synchronized {
-    val key = s"${spark.sparkContext.applicationId}" +
-      s"|s=${Integer.toHexString(System.identityHashCode(spark))}" +
-      s"|$sfDir|k=$k|r=$replicas|sq8"
-    sqRegistry.get(key) match {
-      case Some(idx) => idx
-      case None =>
-        val base = buildOrGet(spark, sfDir, k, replicas)
-        val e = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val sq = trainSq(boundedSample(e))
-        val codes = base.lists.select(col("vec_id"), col("cell"),
-            graft.functions.SqEncode(col("embedding"), sq.mins, sq.scales)
-              .as("codes"))
-          .localCheckpoint()
-        val idx = SqIndex(base.cells, codes, sq)
-        sqRegistry.put(key, idx)
-        sqOrder.add(key)
-        while (sqRegistry.size > MaxCached) {
-          Option(sqOrder.poll()).foreach(sqRegistry.remove)
-        }
-        idx
+      replicas: Int): SqIndex =
+    SessionMemo.getOrBuild(spark, sfDir, s"${indexKey(k, replicas)}|sq8") {
+      val base = buildOrGet(spark, sfDir, k, replicas)
+      val sq = trainSq(boundedSample(vectors(spark, sfDir)))
+      SqIndex(base.cells, encodeLists(base,
+        graft.functions.SqEncode(col("embedding"), sq.mins, sq.scales)), sq)
     }
-  }
 
   /** Build-or-get the OPQ variant: same coarse cells, but vectors are
     * rotated by a learned orthogonal R before PQ slicing (parametric OPQ
@@ -249,44 +177,27 @@ object AnnIndex {
     * side live in the rotated basis. */
   def buildOpqOrGet(spark: SparkSession, sfDir: String, k: Int,
       replicas: Int, m: Int = PqSubspaces,
-      refineIters: Int = 0): PqIndex = synchronized {
-    val key = s"${spark.sparkContext.applicationId}" +
-      s"|s=${Integer.toHexString(System.identityHashCode(spark))}" +
-      s"|$sfDir|k=$k|r=$replicas|opq=$m|ri=$refineIters"
-    pqRegistry.get(key) match {
-      case Some(idx) => idx
-      case None =>
-        val base = buildOrGet(spark, sfDir, k, replicas)
-        val e = Tables.embeddings(spark, sfDir)
-          .select(col("vec_id"), col("embedding"))
-        val sample = boundedSample(e)
-        val pq =
-          if (refineIters > 0) {
-            val (rot, cb) = trainOpqIterative(sample, m, refineIters)
-            Pq(cb, Some(rot))
-          } else {
-            val rot = trainOpqRotation(sample, m)
-            Pq(trainPq(sample.map(applyRotation(rot, _)), m), Some(rot))
-          }
-        val codes = base.lists.select(col("vec_id"), col("cell"),
-            graft.functions.PqEncode(
-              graft.functions.RotateVec(col("embedding"), pq.rot.get),
-              pq.codebooks).as("codes"))
-          .localCheckpoint()
-        val idx = PqIndex(base.cells, codes, pq)
-        pqRegistry.put(key, idx)
-        pqOrder.add(key)
-        while (pqRegistry.size > MaxCached) {
-          Option(pqOrder.poll()).foreach(pqRegistry.remove)
+      refineIters: Int = 0): PqIndex =
+    SessionMemo.getOrBuild(spark, sfDir,
+        s"${indexKey(k, replicas)}|opq=$m|ri=$refineIters") {
+      val base = buildOrGet(spark, sfDir, k, replicas)
+      val sample = boundedSample(vectors(spark, sfDir))
+      val pq =
+        if (refineIters > 0) {
+          val (rot, cb) = trainOpqIterative(sample, m, refineIters)
+          Pq(cb, Some(rot))
+        } else {
+          val rot = trainOpqRotation(sample, m)
+          Pq(trainPq(sample.map(applyRotation(rot, _)), m), Some(rot))
         }
-        idx
+      PqIndex(base.cells, encodeLists(base, graft.functions.PqEncode(
+        graft.functions.RotateVec(col("embedding"), pq.rot.get),
+        pq.codebooks)), pq)
     }
-  }
 
   private[llm] def build(spark: SparkSession, sfDir: String, k: Int,
       replicas: Int): Index = {
-    val e = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
+    val e = vectors(spark, sfDir)
     val cells = trainQuantizer(spark, e, k)
     // one distributed pass builds the inverted lists; checkpoint so every
     // probe starts from the materialized table, not the build lineage

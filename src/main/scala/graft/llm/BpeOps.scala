@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.util.Det
+import graft.util.{Det, SessionMemo}
 
 /** Deterministic byte-pair-encoding (BPE) subword tokenizer, trained ON
   * the corpus and applied map-side — the subword token accounting a real
@@ -186,13 +186,11 @@ object BpeOps {
     * of the corpus dir, and every downstream query replays it — paying
     * the 10 sequential training rounds once per corpus (the model
     * registry posture of a real pipeline: train the tokenizer, then
-    * tokenize everywhere) instead of once per query. Model-sized values
-    * only (10 string pairs). */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Merge]]()
-
+    * tokenize everywhere) instead of once per query ([[SessionMemo]]).
+    * Model-sized values only (10 string pairs). */
   private[llm] def trainMerges(spark: SparkSession, sfDir: String): Seq[Merge] =
-    modelCache.computeIfAbsent(sfDir, _ => trainMergesUncached(spark, sfDir))
+    SessionMemo.getOrBuild(spark, sfDir, "bpe.model")(
+      trainMergesUncached(spark, sfDir))
 
   /** Learn [[Merges]] merge rules from the corpus word-frequency dict.
     *
@@ -320,21 +318,6 @@ object BpeOps {
   private val ChunkBpeTokens = 64
   private val ChunkBpeStep = 48 // 16-subword overlap between chunks
 
-  /** Per-document subword ENCODING (not just counts): every word's
-    * rendered subwords re-assembled in document order — the actual
-    * tokenizer output a trainer consumes. The assembly is
-    * posexplode → broadcast word-map join → one per-doc aggregate whose
-    * order is pinned by sorting (pos, wtok) structs, so the emitted
-    * string is deterministic under any partitioning. */
-  /** Tokenize-once memo beside the model registry: the encoded corpus
-    * is a pure deterministic function of (corpus dir, model), every
-    * consumer replays it verbatim (bpe_encode emits it, chunk_bpe
-    * windows over it, the streaming admission spec reads its counts),
-    * and a real pipeline materializes tokenizer output once. The
-    * checkpoint bounds memory to the encoded rows (~3 KB/doc). */
-  private val encodedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The UNCACHED encode plan, for plan-posture specs: the memo's
     * checkpoint hides the word-map broadcast join from every consumer
     * query's plan (the localCheckpoint/PlanSpec rule), so the spec
@@ -357,13 +340,26 @@ object BpeOps {
           "transform(array_sort(collect_list(struct(pos, wtok))), x -> x.wtok)"))
           .as("toks"))
 
+  /** Per-document subword ENCODING (not just counts): every word's
+    * rendered subwords re-assembled in document order — the actual
+    * tokenizer output a trainer consumes. The assembly is
+    * posexplode → broadcast word-map join → one per-doc aggregate whose
+    * order is pinned by sorting (pos, wtok) structs, so the emitted
+    * string is deterministic under any partitioning. */
   private def encodedDocsUncached(spark: SparkSession, sfDir: String,
       merges: Seq[Merge]): DataFrame =
     assembleDocs(spark, sfDir, wordSubCounts(spark, sfDir, merges))
 
+  /** Tokenize-once memo beside the model registry: the encoded corpus
+    * is a pure deterministic function of (corpus dir, model), every
+    * consumer replays it verbatim (bpe_encode emits it, chunk_bpe
+    * windows over it, the streaming admission spec reads its counts),
+    * and a real pipeline materializes tokenizer output once
+    * ([[SessionMemo]]). The checkpoint bounds memory to the encoded rows
+    * (~3 KB/doc). */
   private def encodedDocs(spark: SparkSession, sfDir: String,
       merges: Seq[Merge]): DataFrame =
-    encodedCache.computeIfAbsent(sfDir, _ =>
+    SessionMemo.getOrBuild(spark, sfDir, "bpe.encoded")(
       encodedDocsUncached(spark, sfDir, merges).localCheckpoint())
 
   def bpeEncode(spark: SparkSession, sfDir: String): DataFrame =

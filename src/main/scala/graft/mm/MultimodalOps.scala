@@ -3,7 +3,7 @@ package graft.mm
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.util.Det
+import graft.util.{Det, SessionMemo}
 
 /** A media item: opaque binary payload + typed metadata. At production the
   * payload is the raw image/audio/video bytes (or an object-store pointer
@@ -53,45 +53,17 @@ object MultimodalOps {
   private val FeatureDim = 16
   private val FrameBytes = 64
 
-  /** Bounded build-once registry for the encoded media corpus — the
-    * AnnIndex discipline applied to the ingest/encode stage: at
-    * production the encode (or decode-and-normalize) of a binary
-    * corpus runs ONCE and every downstream read consumes the
-    * materialized table, so the declared mm queries share one
-    * synthesize+encode pass per (session, corpus) instead of paying
-    * it each. Keys include the session identity (a second session
-    * must not receive plans bound to another session's conf); oldest
-    * evicts; eviction drops the reference only (ContextCleaner
-    * reclaims the checkpoint blocks once unreachable). */
-  private val mediaRegistry =
-    scala.collection.concurrent.TrieMap.empty[String, Dataset[MediaRow]]
-  private val mediaOrder =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
-  private val MaxCached = 4
-
+  /** Build-once encoded media corpus ([[SessionMemo]]) — the AnnIndex
+    * discipline applied to the ingest/encode stage: at production the
+    * encode (or decode-and-normalize) of a binary corpus runs ONCE and
+    * every downstream read consumes the materialized table, so the
+    * declared mm queries share one synthesize+encode pass per session
+    * and corpus instead of paying it each. LAZY checkpoint: plan
+    * construction (PlanSpec's sweep) runs no encode job; the first
+    * executed query materializes it. */
   def mediaOrGet(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
-    synchronized {
-      val key = s"${spark.sparkContext.applicationId}" +
-        s"|s=${Integer.toHexString(System.identityHashCode(spark))}|$sfDir"
-      mediaRegistry.get(key) match {
-        case Some(m) => m
-        case None =>
-          // LAZY checkpoint: plan construction (PlanSpec's sweep) runs
-          // no encode job; the first executed query materializes it
-          val m = media(spark, sfDir).localCheckpoint(eager = false)
-          mediaRegistry.put(key, m)
-          mediaOrder.add(key)
-          while (mediaRegistry.size > MaxCached) {
-            Option(mediaOrder.poll()).foreach(mediaRegistry.remove)
-          }
-          m
-      }
-    }
-
-  /** For specs: drop the cached corpora. */
-  private[graft] def clearMedia(): Unit = {
-    mediaRegistry.clear(); mediaOrder.clear()
-  }
+    SessionMemo.getOrBuild(spark, sfDir, "mm.media")(
+      media(spark, sfDir).localCheckpoint(eager = false))
 
   /** Deterministic synthetic media over `documents`: every payload is a
     * REAL container — text bytes rendered as grayscale pixels in a

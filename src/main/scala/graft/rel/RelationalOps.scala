@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.util.Det
+import graft.util.{Det, SessionMemo}
 
 /** Relational surface of the engine (SURVEY §2.2): scans, predicates, the
   * full join family, grouping sets, windows, set ops, and scalar-function
@@ -1060,18 +1060,11 @@ object RelationalOps {
     * common prefix of every graph read (the tokenize-once discipline —
     * a real pipeline materializes the edge table once and every
     * algorithm consumes it), so consumers after the first reuse the
-    * checkpointed edges instead of re-deriving them. */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
+    * checkpointed edges instead of re-deriving them ([[SessionMemo]]). */
   private def coPurchasePairs(spark: SparkSession, sfDir: String,
       sliceMod: Option[Int]): DataFrame =
-    // key includes the session identity (the media-registry rule): a
-    // plan bound to a stopped session must never serve a fresh one
-    pairsCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|" +
-        s"${Integer.toHexString(System.identityHashCode(spark))}|" +
-        s"$sfDir|${sliceMod.getOrElse(0)}", _ => {
+    SessionMemo.getOrBuild(spark, sfDir,
+        s"rel.coPurchasePairs|${sliceMod.getOrElse(0)}") {
       val base = Tables.lineitem(spark, sfDir)
       val sliced =
         sliceMod.fold(base)(m => base.where(col("l_partkey") % m === 0))
@@ -1095,7 +1088,7 @@ object RelationalOps {
         // the work it FEEDS is not.
         .repartition(spark.sparkContext.defaultParallelism, col("pa"))
         .localCheckpoint(eager = false)
-    })
+    }
 
   /** Scale-adaptive layout for ITERATIVE graph rounds (r17, guide §2 —
     * derive partitioning from input size, never a constant): the
@@ -1257,19 +1250,24 @@ object RelationalOps {
     * r17 distinct; the by-s copy is one more edge-list exchange paid
     * ONCE instead of every round. At 100 TB both copies are disk-backed
     * buckets — the standard trade of one materialized layout per join
-    * key against per-round shuffles of the same bytes. */
-  private def hitsGraphKeyed(spark: SparkSession, sfDir: String)
+    * key against per-round shuffles of the same bytes. Both layouts are
+    * [[SessionMemo]] entries: every HITS read of a session shares them,
+    * and the memo unpersists them when it releases them. */
+  private[graft] def hitsGraphKeyed(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) = {
-    val o = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
-    val l = Tables.lineitem(spark, sfDir)
-      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s"))
-    val byC = o.join(l, "ok").select(col("c"), col("s"))
-      .repartition(col("c")).distinct()
-      .sortWithinPartitions("c")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val byS = byC.repartition(col("s")).sortWithinPartitions("s")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val byC = SessionMemo.getOrBuild(spark, sfDir, "rel.hitsByC") {
+      val o = Tables.orders(spark, sfDir)
+        .select(col("o_orderkey").as("ok"), col("o_custkey").as("c"))
+      val l = Tables.lineitem(spark, sfDir)
+        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("s"))
+      o.join(l, "ok").select(col("c"), col("s"))
+        .repartition(col("c")).distinct()
+        .sortWithinPartitions("c")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val byS = SessionMemo.getOrBuild(spark, sfDir, "rel.hitsByS")(
+      byC.repartition(col("s")).sortWithinPartitions("s")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     (byC, byS)
   }
 

@@ -3,7 +3,7 @@ package graft.ts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.util.Det
+import graft.util.{Det, SessionMemo}
 
 /** Kenshin TSDB semantics re-expressed as Spark declarative plans.
   *
@@ -41,36 +41,15 @@ object TimeSeriesOps {
     * applied to this module's own read path (R4/R6: fetch routes to
     * precomputed rollup archives, never to raw points): the
     * (event_type, bucket, exact-avg) relation is the identical common
-    * prefix of ~60 ts queries, so it memoizes per (session, corpus) as
-    * a lazily-checkpointed relation — the coPurchasePairs /
-    * tokenize-once discipline (r17). Computed from the parquet inputs
-    * at first use within a run; never persisted across runs. The
-    * archive is series×calendar-sized (types × hours — thousands of
+    * prefix of ~60 ts queries, so it is built once per session and
+    * input version ([[SessionMemo]]) as a lazily-checkpointed relation.
+    * The archive is series×calendar-sized (types × hours — thousands of
     * rows at any corpus SF, since scale grows traffic density, not the
     * calendar), so the frozen AQE-coalesced layout is the layout every
     * consumer already saw behind its own per-query checkpoint. */
-  private val hourlyAvgCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** appIds that already registered an end-of-application eviction hook
-    * (r17 advice: without cleanup a long-lived multi-context JVM pins
-    * every dead app's checkpointed archive RDDs forever). */
-  private val hourlyAvgCleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def registerHourlyAvgCleanup(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    if (hourlyAvgCleanupRegistered.add(appId))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = {
-            hourlyAvgCache.keySet.removeIf(_.startsWith(appId + "|"))
-            hourlyAvgCleanupRegistered.remove(appId)
-          }
-        })
-  }
+  private def hourlyAvg(spark: SparkSession, sfDir: String): DataFrame =
+    SessionMemo.getOrBuild(spark, sfDir, "ts.hourlyAvg")(
+      hourlyAvgRelation(spark, sfDir).localCheckpoint(eager = false))
 
   /** The archive's PRE-CHECKPOINT relation — what actually executes to
     * build it. PlanSpec inspects this (the standing rule: localCheckpoint
@@ -78,14 +57,6 @@ object TimeSeriesOps {
   private[graft] def hourlyAvgRelation(spark: SparkSession,
       sfDir: String): DataFrame =
     hourly(spark, sfDir).agg(Det.avg4(col("value")).as("v"))
-
-  private def hourlyAvg(spark: SparkSession, sfDir: String): DataFrame = {
-    registerHourlyAvgCleanup(spark)
-    hourlyAvgCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}|" +
-        s"${Integer.toHexString(System.identityHashCode(spark))}|$sfDir",
-      _ => hourlyAvgRelation(spark, sfDir).localCheckpoint(eager = false))
-  }
 
   /** 1h tumbling average per series — the flagship rollup (R5/R6 `average`). */
   def rollupAvg(spark: SparkSession, sfDir: String): DataFrame =

@@ -239,4 +239,13 @@ class BpeSpec extends AnyFunSuite {
       assert(rs.map(_.getLong(3)).sum <= 8000L, s"lang $lang over budget")
     }
   }
+
+  test("bpe memo serves a second session its own plan, same tokens") {
+    val first = BpeOps.bpeEncode(spark, sf).collect().map(_.toSeq).toSeq
+    val s2 = spark.newSession()
+    val second = BpeOps.bpeEncode(s2, sf)
+    assert(second.sparkSession eq s2,
+      "a plan bound to the first session was served to the second")
+    assert(second.collect().map(_.toSeq).toSeq == first)
+  }
 }

@@ -23,4 +23,28 @@ class InstrumentSpec extends AnyFunSuite {
     Instrument.inc("points.received", 42)
     assert(Instrument.snapshot()("points.received") == 42)
   }
+
+  test("memo counters: a repeat is a hit, the bound evicts once, " +
+      "a failed build inserts nothing") {
+    import graft.util.SessionMemo
+    val sf = TestSpark.sf
+    SessionMemo.clear()
+    Instrument.reset()
+    val first = SessionMemo.getOrBuild(spark, sf, "spec.k0")(new Object)
+    assert(SessionMemo.getOrBuild(spark, sf, "spec.k0")(new Object) eq first)
+    assert(Instrument.get("memo.hit") == 1 &&
+      Instrument.get("memo.miss") == 1 && Instrument.get("memo.evict") == 0)
+    (1 to SessionMemo.MaxEntries).foreach(i =>
+      SessionMemo.getOrBuild(spark, sf, s"spec.k$i")(new Object))
+    assert(Instrument.get("memo.evict") == 1,
+      s"bound + 1 keys must evict once: ${Instrument.snapshot()}")
+    assert(!(SessionMemo.getOrBuild(spark, sf, "spec.k0")(new Object) eq first),
+      "the oldest entry must be the evicted one")
+    intercept[IllegalStateException](SessionMemo.getOrBuild[AnyRef](
+      spark, sf, "spec.fail")(throw new IllegalStateException("build failed")))
+    var builds = 0
+    SessionMemo.getOrBuild(spark, sf, "spec.fail") { builds += 1; new Object }
+    assert(builds == 1, "a failed build must leave no entry")
+    SessionMemo.clear()
+  }
 }

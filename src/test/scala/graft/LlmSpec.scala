@@ -695,7 +695,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("ann drift guard: imbalance above the bound evicts and rebuilds") {
     import graft.llm.AnnIndex
-    AnnIndex.clear()
+    graft.util.SessionMemo.clear()
     val (idx0, r0) = AnnIndex.refreshIfDrifted(spark, sf, 10, 2, 1000.0)
     assert(!r0, "a generous bound must keep the cached index")
     assert(AnnIndex.refreshIfDrifted(spark, sf, 10, 2, 1000.0)._1 eq idx0,
@@ -716,7 +716,7 @@ class LlmSpec extends AnyFunSuite {
 
   test("ann index: registry caches the build; persist/load probes equal") {
     import graft.llm.AnnIndex
-    AnnIndex.clear()
+    graft.util.SessionMemo.clear()
     val idx = AnnIndex.buildOrGet(spark, sf, 10, 2)
     // second lookup is the SAME materialized index, not a rebuild
     assert(AnnIndex.buildOrGet(spark, sf, 10, 2) eq idx)

@@ -1047,4 +1047,51 @@ class RelationalSpec extends AnyFunSuite {
     assert(sv.zip(sv.tail).forall { case (a, b) => b <= a })
     assert(sv.forall(x => x >= 0.0 && x <= 1.0))
   }
+
+  test("hits layouts are memo-owned: a repeat call persists nothing new, " +
+      "clear() unpersists both") {
+    import org.apache.spark.storage.StorageLevel
+    import graft.util.SessionMemo
+    // driver-side twin of the q_part_hits oracle: 3 integer-exact rounds
+    // over the distinct (customer, supplier) edges, top 10 per side
+    val edges = graft.io.Tables.orders(spark, sf)
+      .join(graft.io.Tables.lineitem(spark, sf),
+        col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").cast("long"), col("l_suppkey").cast("long"))
+      .distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def scaled(sums: Map[Long, Long]) = {
+      val mx = sums.values.max
+      sums.map { case (n, v) => n -> v * 1000000L / mx }
+    }
+    var h = edges.map(_._1).distinct.map(_ -> 1000000L).toMap
+    var a = Map.empty[Long, Long]
+    for (_ <- 1 to 3) {
+      a = scaled(edges.groupMapReduce(_._2)(e => h(e._1))(_ + _))
+      h = scaled(edges.groupMapReduce(_._1)(e => a(e._2))(_ + _))
+    }
+    def top(side: String, m: Map[Long, Long]) =
+      m.toSeq.sortBy { case (n, v) => (-v, n) }.take(10).zipWithIndex
+        .map { case ((n, v), i) => (side, n, v, i + 1L) }
+    val oracle = top("authority", a) ++ top("hub", h)
+    def run() = RelationalOps.partHits(spark, sf).collect().map(r =>
+      (r.getString(0), r.getAs[Number](1).longValue, r.getLong(2),
+        r.getLong(3))).toSeq
+    def persisted() = { System.gc(); spark.sparkContext.getPersistentRDDs.size }
+
+    SessionMemo.clear()
+    val n0 = persisted()
+    assert(run() == oracle)
+    val n1 = persisted()
+    assert(run() == oracle)
+    val n2 = persisted()
+    assert(n2 <= n1, s"persistent RDDs grew on a repeat call: $n1 -> $n2")
+    val (byC, byS) = RelationalOps.hitsGraphKeyed(spark, sf)
+    assert(byC.storageLevel != StorageLevel.NONE &&
+      byS.storageLevel != StorageLevel.NONE)
+    SessionMemo.clear()
+    assert(byC.storageLevel == StorageLevel.NONE &&
+      byS.storageLevel == StorageLevel.NONE, "clear() must unpersist both")
+    assert(persisted() == n0, "a released layout is still persisted")
+    assert(run() == oracle)
+  }
 }

@@ -4,13 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 }
 
@@ -1357,6 +1351,43 @@ class TimeSeriesSpec extends AnyFunSuite {
     got.foreach { case (s1, s2, _, _, ns, _, tau) =>
       tau.foreach(t => assert(math.abs(t) <= 1.0, s"($s1,$s2): $t"))
       assert(ns == 24L, s"($s1,$s2): only $ns strata")
+    }
+  }
+
+  test("rollup memo rebuilds after its input file is rewritten") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.functions.col
+    import graft.util.Instrument
+    val target = Files.createDirectories(Paths.get("target"))
+    val tmp = Files.createTempDirectory(target, "memo_stale")
+    val dir = Files.createDirectory(tmp.resolve("sf"))
+    val d = dir.toAbsolutePath.toString
+    try {
+      Files.list(Paths.get(sf)).forEach(f =>
+        Files.copy(f, dir.resolve(f.getFileName)))
+      val before = TimeSeriesOps.rollupAvg(spark, d).collect().toSeq
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      val dropped = raw.select("event_type").distinct().orderBy("event_type")
+        .head().getString(0)
+      // written beside the copy, so the only change under it is the
+      // rewritten events.parquet
+      val subset = tmp.resolve("subset").toString
+      raw.where(col("event_type") =!= dropped).coalesce(1)
+        .write.parquet(subset)
+      val part = Files.list(Paths.get(subset)).toArray.map(_.toString)
+        .find(_.endsWith(".parquet")).get
+      Files.move(Paths.get(part), dir.resolve("events.parquet"),
+        StandardCopyOption.REPLACE_EXISTING)
+      val misses = Instrument.get("memo.miss")
+      val after = TimeSeriesOps.rollupAvg(spark, d).collect().toSeq
+      val fresh = TimeSeriesOps.hourlyAvgRelation(spark, d)
+        .orderBy("event_type", "bucket").collect().toSeq
+      assert(after != before, "the rewrite must change the rollup")
+      assert(after == fresh, "memo served a rollup of the old file")
+      assert(Instrument.get("memo.miss") > misses)
+    } finally {
+      Files.walk(tmp).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
     }
   }
 }
