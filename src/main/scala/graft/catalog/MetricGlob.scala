@@ -152,13 +152,6 @@ object MetricGlob {
     if (prefix.nonEmpty) metric.startsWith(prefix) && re else re
   }
 
-  /** Graphite `grep(seriesList, pattern)`: keep series whose name
-    * matches the REGEX (unanchored, as graphite-web's re.search —
-    * `render/functions.py — grep` [U]). Patterns should stay in the
-    * RE2-compatible subset so SQL-pushdown engines agree. */
-  def grepPredicate(metric: Column, pattern: String): Column =
-    metric.rlike(pattern)
-
   /** Graphite `exclude(seriesList, pattern)`: drop series whose name
     * matches the REGEX (`render/functions.py — exclude` [U]) — the
     * negative filter composed AFTER a glob resolves the candidate set. */

@@ -45,7 +45,6 @@ final case class RetentionPolicy(name: String, pattern: Regex,
 
   def matches(metric: String): Boolean =
     pattern.findFirstIn(metric).isDefined
-  def maxRetentionSeconds: Long = archives.map(_.retentionSeconds).max
 }
 
 /** The schema catalog: ordered policies, first match wins; a default

@@ -114,20 +114,6 @@ package object functions {
       org.apache.spark.sql.graft.BloomBridge.might(bloom, key)
   }
 
-  /** Perceptual 8×8 average-hash of a BMP image payload → LONG
-    * (SQL `image_ahash`); near-dup via `bit_count(h1 # h2)`. */
-  object ImageAhash {
-    def apply(payload: Column): Column =
-      org.apache.spark.sql.graft.ImageAhashExpr(payload)
-  }
-
-  /** 64-frame energy-envelope hash of a WAV payload → LONG
-    * (SQL `audio_ahash`). */
-  object AudioAhash {
-    def apply(payload: Column): Column =
-      org.apache.spark.sql.graft.AudioAhashExpr(payload)
-  }
-
   /** Register graft's native expressions as SQL functions in a live
     * session (`cosine_sim`, `simhash_agg`); for session-build wiring use
     * `spark.sql.extensions=graft.GraftExtensions`. Idempotent. */

@@ -2675,19 +2675,12 @@ object TextOps {
     val sym = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
       .localCheckpoint(eager = false)
-    var labels = Tables.documents(spark, sfDir)
+    val docs = Tables.documents(spark, sfDir)
       .where(col("doc_id") < 200)
-      .select(col("doc_id"), col("doc_id").as("comp"))
-    for (_ <- 1 to 6) {
-      val nbrMin = sym.join(labels, sym("src") === labels("doc_id"))
-        .groupBy(col("dst")).agg(min(col("comp")).as("m"))
-      labels = labels
-        .join(nbrMin, labels("doc_id") === nbrMin("dst"), "left")
-        .select(col("doc_id"),
-          least(col("comp"), coalesce(col("m"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = false)
-    }
-    labels.orderBy("doc_id")
+      .select(col("doc_id").as("node"), col("doc_id").as("comp"))
+    graft.rel.RelationalOps.minLabels(sym, docs, 6, converge = false)
+      .select(col("node").as("doc_id"), col("comp"))
+      .orderBy("doc_id")
   }
 
   /** Gopher-style rule-based quality gate (Rae et al. 2021, "Scaling

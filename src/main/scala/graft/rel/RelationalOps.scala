@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.util.{Det, SessionMemo}
+import graft.util.{Det, Rounds, SessionMemo}
 
 /** Relational surface of the engine (SURVEY §2.2): scans, predicates, the
   * full join family, grouping sets, windows, set ops, and scalar-function
@@ -1140,20 +1140,14 @@ object RelationalOps {
       .localCheckpoint(eager = false)
   }
 
-  def partPagerank(spark: SparkSession, sfDir: String): DataFrame = {
+  def partPagerank(spark: SparkSession, sfDir: String): DataFrame =
     // the oracle SLICE runs on the deterministic quarter of the part
     // domain (pk % 4 = 0 — the dup_components bounding pattern: the
     // operator's shape is scale-free, the verified slice keeps the
     // 3-round × 2-join × agg pipeline cheap at every SF)
-    val (sym0, deg) = coPurchaseGraph(spark, sfDir, Some(4))
-    val sym = loopLayout(spark, sym0) // size-derived round layout (r17)
-    var r = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-    for (_ <- 1 to 3) r = pagerankRound(r, sym, deg)
-    r.join(deg, col("node") === col("src"))
-      .select(col("node"), col("outdeg"), col("r").as("rank_scaled"))
+    pagerankRanks(spark, sfDir, Some(4), 3, None)
       .orderBy(col("rank_scaled").desc, col("node"))
       .limit(20)
-  }
 
   /** The PRODUCTION PageRank — [[partPagerank]]'s kernel, unsliced and
     * CONVERGENCE-STOPPED (the kmeansConvergedPar pattern): same
@@ -1175,21 +1169,24 @@ object RelationalOps {
     * cap with conserved total rank mass. */
   def partPagerankConverged(spark: SparkSession, sfDir: String,
       sliceMod: Option[Int] = None, maxRounds: Int = 30,
-      tolScaled: Long = 100L): DataFrame = {
+      tolScaled: Long = 100L): DataFrame =
+    pagerankRanks(spark, sfDir, sliceMod, maxRounds, Some(tolScaled))
+
+  /** Every node's rank after `cap` rounds, or once no rank moves by
+    * more than `tol` when one is given. */
+  private def pagerankRanks(spark: SparkSession, sfDir: String,
+      sliceMod: Option[Int], cap: Int, tol: Option[Long]): DataFrame = {
     val (sym0, deg) = coPurchaseGraph(spark, sfDir, sliceMod)
     val sym = loopLayout(spark, sym0) // size-derived round layout (r17)
-    var r = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-    var rounds = 0
-    var moved = Long.MaxValue
-    while (moved > tolScaled && rounds < maxRounds) {
-      val next = pagerankRound(r, sym, deg)
+    val moved: (DataFrame, DataFrame) => Long = (r, next) => {
       val probe = next
         .join(r.select(col("node"), col("r").as("r_prev")), "node")
         .agg(max(abs(col("r") - col("r_prev")))).head
-      moved = if (probe.isNullAt(0)) 0L else probe.getLong(0) // empty graph
-      r = next
-      rounds += 1
+      if (probe.isNullAt(0)) 0L else probe.getLong(0) // empty graph
     }
+    val r0 = deg.select(col("src").as("node"), lit(1000000L).as("r"))
+    val (r, _) = Rounds(r0, cap, tol.map(_ => moved), tol.getOrElse(0L))(
+      pagerankRound(_, sym, deg))
     r.join(deg, col("node") === col("src"))
       .select(col("node"), col("outdeg"), col("r").as("rank_scaled"))
   }
@@ -1298,55 +1295,53 @@ object RelationalOps {
     * [[partHitsConverged]] is the convergence-stopped production
     * twin. Top-10 per side under the (side, score DESC, node) total
     * order. */
-  def partHits(spark: SparkSession, sfDir: String): DataFrame = {
-    val (edgesByC, edgesByS) = hitsGraphKeyed(spark, sfDir)
-    // distinct(c) rides the by-c layout — no exchange
-    var h = edgesByC.select(col("c")).distinct()
-      .withColumn("h", lit(1000000L))
-      .localCheckpoint(eager = false)
-    var a: DataFrame = null
-    for (_ <- 1 to 3) {
-      val (a2, h2) = hitsRound(edgesByC, edgesByS, h)
-      a = a2; h = h2
-    }
-    hitsSummary(a, h)
-  }
+  def partHits(spark: SparkSession, sfDir: String): DataFrame =
+    hitsScores(spark, sfDir, 3, None)
 
   /** The PRODUCTION HITS — [[partHits]]'s kernel, CONVERGENCE-STOPPED
     * (the partPagerankConverged pattern): iterate the same
     * integer-exact round until the largest per-node move on EITHER
     * side is ≤ `tolScaled` (10⁶-scale units) or `maxRounds` caps a
-    * pathological graph; the probe is two scalar max-|Δ| aggregates
-    * per round — driver-synchronized scalars, never data. Returns the
+    * pathological graph; the probe is one fused max-|Δ| aggregate per
+    * round — a driver-synchronized scalar, never data. Returns the
     * same top-10-per-side summary. SPEC-GATED, not an oracle query
     * (data-dependent round count): the spec forces the round budget
     * to the oracle's 3 (tol 0) and proves bit-equality to
     * [[partHits]], then full convergence under the default cap. */
   def partHitsConverged(spark: SparkSession, sfDir: String,
-      maxRounds: Int = 30, tolScaled: Long = 100L): DataFrame = {
+      maxRounds: Int = 30, tolScaled: Long = 100L): DataFrame =
+    hitsScores(spark, sfDir, maxRounds, Some(tolScaled))
+
+  /** The (authority, hub) state after `cap` rounds, or once neither
+    * side moves by more than `tol` when one is given, summarized. */
+  private def hitsScores(spark: SparkSession, sfDir: String, cap: Int,
+      tol: Option[Long]): DataFrame = {
     val (edgesByC, edgesByS) = hitsGraphKeyed(spark, sfDir)
-    var h = edgesByC.select(col("c")).distinct()
-      .withColumn("h", lit(1000000L))
-      .localCheckpoint(eager = false)
-    var a: DataFrame = edgesByS.select(col("s")).distinct()
-      .withColumn("a", lit(1000000L))
-      .localCheckpoint(eager = false)
-    var rounds = 0
-    var moved = Long.MaxValue
-    while (moved > tolScaled && rounds < maxRounds) {
-      val (a2, h2) = hitsRound(edgesByC, edgesByS, h)
-      // ONE fused probe job (r13 verdict ask): both sides' |Δ| union
-      // into a single max — the relations are checkpoint-backed, so
-      // the union's no-CSE hazard costs nothing
-      val probe = a2.join(a.select(col("s"), col("a").as("ap")), "s")
-        .select(abs(col("a") - col("ap")).as("d"))
-        .unionByName(
-          h2.join(h.select(col("c"), col("h").as("hp")), "c")
-            .select(abs(col("h") - col("hp")).as("d")))
-        .agg(max(col("d"))).head
-      moved = if (probe.isNullAt(0)) 0L else probe.getLong(0)
-      a = a2; h = h2
-      rounds += 1
+    // distinct rides the keyed layout — no exchange
+    def ones(edges: DataFrame, node: String, score: String) =
+      edges.select(col(node)).distinct()
+        .withColumn(score, lit(1000000L))
+        .localCheckpoint(eager = false)
+    // ONE fused probe job (r13 verdict ask): both sides' |Δ| union into
+    // a single max — the relations are checkpoint-backed, so the
+    // union's no-CSE hazard costs nothing
+    val moved: ((DataFrame, DataFrame), (DataFrame, DataFrame)) => Long = {
+      case ((a, h), (a2, h2)) =>
+        val probe = a2.join(a.select(col("s"), col("a").as("ap")), "s")
+          .select(abs(col("a") - col("ap")).as("d"))
+          .unionByName(
+            h2.join(h.select(col("c"), col("h").as("hp")), "c")
+              .select(abs(col("h") - col("hp")).as("d")))
+          .agg(max(col("d"))).head
+        if (probe.isNullAt(0)) 0L else probe.getLong(0)
+    }
+    val h0 = ones(edgesByC, "c", "h")
+    // only the probe reads the initial authorities
+    val a0 = if (tol.isEmpty) null else ones(edgesByS, "s", "a")
+    val ((a, h), _) = Rounds.run[(DataFrame, DataFrame)](
+      (a0, h0), cap, s => Seq(s._1, s._2),
+      tol.map(_ => moved), tol.getOrElse(0L)) {
+      case (_, h) => hitsRound(edgesByC, edgesByS, h)
     }
     hitsSummary(a, h)
   }
@@ -1457,44 +1452,39 @@ object RelationalOps {
     * hash-matches bit-exactly); [[kcoreConverged]] is the production
     * twin that peels to an actual fixpoint. Top-20 survivors under
     * the (core_deg DESC, node) total order. */
-  def partKcore(spark: SparkSession, sfDir: String): DataFrame = {
+  def partKcore(spark: SparkSession, sfDir: String): DataFrame =
+    kcore(spark, sfDir, 3, 6, converge = false)
+
+  /** Convergence-stopped k-core peel (production twin of
+    * [[partKcore]]): peels until the surviving edge count is stable —
+    * the count is the round's only driver-side value (one Long per
+    * round, the partPagerankConverged pattern). */
+  def kcoreConverged(spark: SparkSession, sfDir: String, k: Int = 3,
+      maxRounds: Int = 64): DataFrame =
+    kcore(spark, sfDir, k, maxRounds, converge = true)
+
+  private def kcore(spark: SparkSession, sfDir: String, k: Int, cap: Int,
+      converge: Boolean): DataFrame = {
     val (sym0, _) = coPurchaseGraph(spark, sfDir, Some(4))
-    var e = loopLayout(spark, sym0) // size-derived round layout (r17)
-    for (_ <- 1 to 6) e = kcorePeel(e, 3)
+    val e0 = loopLayout(spark, sym0) // size-derived round layout (r17)
+    val (e, _) = Rounds(e0, cap, if (converge) peeled(e0) else None)(
+      kcorePeel(_, k))
     e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
       .select(col("src").as("node"), col("core_deg"))
       .orderBy(col("core_deg").desc, col("node"))
       .limit(20)
   }
 
-  /** Convergence-stopped k-core peel (production twin of
-    * [[partKcore]]): peels until the surviving edge count is stable —
-    * the count is the round's only driver-side value (one Long per
-    * round, the partPagerankConverged pattern). `forcedRounds` > 0
-    * pins the round budget for the bit-equality spec vs the unrolled
-    * oracle form. */
-  def kcoreConverged(spark: SparkSession, sfDir: String, k: Int = 3,
-      forcedRounds: Int = 0, maxRounds: Int = 64): DataFrame = {
-    val (sym0, _) = coPurchaseGraph(spark, sfDir, Some(4))
-    var e = loopLayout(spark, sym0) // size-derived round layout (r17)
-    if (forcedRounds > 0) {
-      for (_ <- 1 to forcedRounds) e = kcorePeel(e, k)
-    } else {
-      var prev = e.count()
-      var stable = false
-      var round = 0
-      while (!stable && round < maxRounds) {
-        e = kcorePeel(e, k)
-        val n = e.count()
-        stable = n == prev
-        prev = n
-        round += 1
-      }
-    }
-    e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-      .select(col("src").as("node"), col("core_deg"))
-      .orderBy(col("core_deg").desc, col("node"))
-      .limit(20)
+  /** The k-core/k-truss stop probe: edges a round peeled, from a count
+    * carried across rounds (one count per round; 0 = fixpoint). */
+  private def peeled(init: DataFrame): Rounds.Probe[DataFrame] = {
+    var prev = init.count()
+    Some((_, next) => {
+      val n = next.count()
+      val d = prev - n
+      prev = n
+      d
+    })
   }
 
   /** One k-truss peel round over canonical (pa < pb) edges: enumerate
@@ -1533,35 +1523,21 @@ object RelationalOps {
     * cost is one triangle enumeration over the SURVIVING edges —
     * monotone shrinking, bounded by the first round. Top-20 edges
     * under the (sup DESC, pa, pb) total order. */
-  def partKtruss(spark: SparkSession, sfDir: String): DataFrame = {
-    var e = coPurchasePairs(spark, sfDir, Some(4))
-    for (_ <- 1 to 3) e = trussRound(e, 2L)
-    e.select(col("pa"), col("pb"), col("sup"))
-      .orderBy(col("sup").desc, col("pa"), col("pb"))
-      .limit(20)
-  }
+  def partKtruss(spark: SparkSession, sfDir: String): DataFrame =
+    ktruss(spark, sfDir, 4, 3, converge = false)
 
   /** Convergence-stopped twin of [[partKtruss]] (the kcoreConverged
     * pattern): peels until the surviving edge count is stable — one
-    * Long per round driver-side. `forcedRounds` > 0 pins the budget
-    * for the bit-equality spec vs the unrolled oracle form. */
+    * Long per round driver-side. */
   def ktrussConverged(spark: SparkSession, sfDir: String, k: Int = 4,
-      forcedRounds: Int = 0, maxRounds: Int = 64): DataFrame = {
-    var e = coPurchasePairs(spark, sfDir, Some(4))
-    if (forcedRounds > 0) {
-      for (_ <- 1 to forcedRounds) e = trussRound(e, (k - 2).toLong)
-    } else {
-      var prev = e.count()
-      var stable = false
-      var round = 0
-      while (!stable && round < maxRounds) {
-        e = trussRound(e, (k - 2).toLong)
-        val n = e.count()
-        stable = n == prev
-        prev = n
-        round += 1
-      }
-    }
+      maxRounds: Int = 64): DataFrame =
+    ktruss(spark, sfDir, k, maxRounds, converge = true)
+
+  private def ktruss(spark: SparkSession, sfDir: String, k: Int, cap: Int,
+      converge: Boolean): DataFrame = {
+    val e0 = coPurchasePairs(spark, sfDir, Some(4))
+    val (e, _) = Rounds(e0, cap, if (converge) peeled(e0) else None)(
+      trussRound(_, (k - 2).toLong))
     e.select(col("pa"), col("pb"), col("sup"))
       .orderBy(col("sup").desc, col("pa"), col("pb"))
       .limit(20)
@@ -1618,26 +1594,19 @@ object RelationalOps {
     * component. Top-20 components under the (n_members DESC, comp)
     * total order. */
   def partComponents(spark: SparkSession, sfDir: String): DataFrame =
-    componentRounds(spark, sfDir, 8)
+    components(spark, sfDir, 8, converge = false)
 
   /** Convergence-stopped twin of [[partComponents]] (the kcoreConverged
     * pattern): propagate until no label changes — the change count is
     * the round's only driver-side value. */
   def componentsConverged(spark: SparkSession, sfDir: String,
-      maxRounds: Int = 64): DataFrame = {
+      maxRounds: Int = 64): DataFrame =
+    components(spark, sfDir, maxRounds, converge = true)
+
+  private def components(spark: SparkSession, sfDir: String, cap: Int,
+      converge: Boolean): DataFrame = {
     val (sym, nodes) = componentGraph(spark, sfDir)
-    var labels = nodes
-    var changed = Long.MaxValue
-    var round = 0
-    while (changed > 0L && round < maxRounds) {
-      val next = componentStep(sym, labels)
-      changed = next.join(
-          labels.select(col("node"), col("comp").as("prev")), "node")
-        .where(col("comp") =!= col("prev")).count()
-      labels = next
-      round += 1
-    }
-    componentSummary(labels)
+    componentSummary(minLabels(sym, nodes, cap, converge))
   }
 
   /** POINTER-DOUBLING production twin of [[partComponents]] /
@@ -1661,27 +1630,18 @@ object RelationalOps {
     * BIGINT per node; each round is two equi-joins + one aggregate —
     * shuffle-bounded, never a collect. */
   def componentsDoubling(sym: DataFrame, nodes: DataFrame,
-      maxRounds: Int = 32): (DataFrame, Int) = {
-    var labels = nodes.localCheckpoint(eager = false)
-    var changed = Long.MaxValue
-    var round = 0
-    while (changed > 0L && round < maxRounds) {
-      val prop = componentStep(sym, labels)
-      val next = prop.as("a")
-        .join(prop.select(col("node").as("n2"), col("comp").as("c2")),
-          col("a.comp") === col("n2"), "left")
-        .select(col("a.node").as("node"),
-          least(col("a.comp"), coalesce(col("c2"), col("a.comp")))
-            .as("comp"))
-        .localCheckpoint(eager = false)
-      changed = next.join(
-          labels.select(col("node"), col("comp").as("prev")), "node")
-        .where(col("comp") =!= col("prev")).count()
-      labels = next
-      round += 1
+      maxRounds: Int = 32): (DataFrame, Int) =
+    Rounds(nodes.localCheckpoint(eager = false), maxRounds, labelsChanged) {
+      labels =>
+        val prop = componentStep(sym, labels)
+        prop.as("a")
+          .join(prop.select(col("node").as("n2"), col("comp").as("c2")),
+            col("a.comp") === col("n2"), "left")
+          .select(col("a.node").as("node"),
+            least(col("a.comp"), coalesce(col("c2"), col("a.comp")))
+              .as("comp"))
+          .localCheckpoint(eager = false)
     }
-    (labels, round)
-  }
 
   /** [[componentsDoubling]] over the co-purchase graph, summarized —
     * registered as q_part_components_pd against the SAME unrolled
@@ -1765,7 +1725,7 @@ object RelationalOps {
       : (DataFrame, DataFrame) = {
     val e = coPurchasePairs(spark, sfDir, Some(4))
     // every componentGraph consumer is an iterative round loop
-    // (components, pointer doubling, harmonic BFS) — size-derived
+    // (components, pointer doubling, harmonic BFS, LPA) — size-derived
     // round layout (r17, see loopLayout)
     val sym = loopLayout(spark,
       e.select(col("pa").as("src"), col("pb").as("dst"))
@@ -1786,18 +1746,24 @@ object RelationalOps {
       .localCheckpoint(eager = false)
   }
 
+  /** Min-label propagation — the one loop of the part-graph and
+    * near-dup-doc components reads — from `labels` (node, comp) over
+    * the symmetric `sym` (src, dst): `cap` rounds, or until a round
+    * changes no label when `converge`. */
+  private[graft] def minLabels(sym: DataFrame, labels: DataFrame, cap: Int,
+      converge: Boolean): DataFrame =
+    Rounds(labels, cap, if (converge) labelsChanged else None)(
+      componentStep(sym, _))._1
+
+  /** The components stop probe: how many labels the round changed. */
+  private val labelsChanged: Rounds.Probe[DataFrame] = Some((prev, next) =>
+    next.join(prev.select(col("node"), col("comp").as("prev")), "node")
+      .where(col("comp") =!= col("prev")).count())
+
   private def componentSummary(labels: DataFrame): DataFrame =
     labels.groupBy(col("comp")).agg(count(lit(1)).as("n_members"))
       .orderBy(col("n_members").desc, col("comp"))
       .limit(20)
-
-  private def componentRounds(spark: SparkSession, sfDir: String,
-      rounds: Int): DataFrame = {
-    val (sym, nodes) = componentGraph(spark, sfDir)
-    var labels = nodes
-    for (_ <- 1 to rounds) labels = componentStep(sym, labels)
-    componentSummary(labels)
-  }
 
   /** LABEL-PROPAGATION COMMUNITIES (Raghavan 2007, synchronous
     * variant) over the co-purchase graph — the modularity-free
@@ -1812,14 +1778,19 @@ object RelationalOps {
     * that count relation (label-grain, not edge-grain), one node-key
     * join back; label state is one BIGINT per node. Top-20 communities
     * under the (n_members DESC, community) total order. */
-  def partLabelProp(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = coPurchasePairs(spark, sfDir, Some(4))
-    val sym = loopLayout(spark, // size-derived round layout (r17)
-      e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionByName(e.select(col("pb").as("src"), col("pa").as("dst")))
-        .localCheckpoint(eager = false)) // every round's count join
-    val nodes = sym.select(col("src").as("node")).distinct()
+  def partLabelProp(spark: SparkSession, sfDir: String): DataFrame =
+    lpaLabels(spark, sfDir)._2.groupBy(col("lbl").as("community"))
+      .agg(count(lit(1)).as("n_members"))
+      .orderBy(col("n_members").desc, col("community"))
+      .limit(20)
+
+  /** [[componentGraph]]'s symmetric edges and their (node, lbl) labels
+    * after the 4 synchronous LPA rounds — a fixed-round loop, so a
+    * plain `for`. */
+  private def lpaLabels(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
+    val (sym, nodes0) = componentGraph(spark, sfDir)
+    val nodes = nodes0.select(col("node"))
       .localCheckpoint(eager = false) // every round's carry join
     var labels = nodes.select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to 4) {
@@ -1833,12 +1804,9 @@ object RelationalOps {
       labels = nodes
         .join(pick, Seq("node"), "left")
         .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
-        .localCheckpoint(eager = false) // next round + summary
+        .localCheckpoint(eager = false) // next round + the reader
     }
-    labels.groupBy(col("lbl").as("community"))
-      .agg(count(lit(1)).as("n_members"))
-      .orderBy(col("n_members").desc, col("community"))
-      .limit(20)
+    (sym, labels)
   }
 
   /** NEWMAN MODULARITY of the [[partLabelProp]] partition — the
@@ -1854,29 +1822,7 @@ object RelationalOps {
     * Shape: the LPA rounds + one edge-key label join + two
     * community-grain aggregates. */
   def partModularity(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = coPurchasePairs(spark, sfDir, Some(4))
-    val sym = loopLayout(spark, // size-derived round layout (r17)
-      e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionByName(e.select(col("pb").as("src"), col("pa").as("dst")))
-        .localCheckpoint(eager = false)) // rounds + stub join + degree
-    val nodes = sym.select(col("src").as("node")).distinct()
-      .localCheckpoint(eager = false) // rounds
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-    for (_ <- 1 to 4) {
-      val cnt = sym.join(labels, sym("src") === labels("node"))
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("dst"))
-        .orderBy(col("c").desc, col("lbl"))
-      val pick = cnt.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("dst").as("node"), col("lbl"))
-      labels = nodes
-        .join(pick, Seq("node"), "left")
-        .select(col("node"), coalesce(col("lbl"), col("node")).as("lbl"))
-        .localCheckpoint(eager = false)
-    }
-    val lbl = labels.localCheckpoint(eager = false) // both stub ends + deg
+    val (sym, lbl) = lpaLabels(spark, sfDir) // both stub ends + degree
     val stubs = sym
       .join(lbl.select(col("node").as("src"), col("lbl").as("ls")), "src")
       .join(lbl.select(col("node").as("dst"), col("lbl").as("ld")), "dst")

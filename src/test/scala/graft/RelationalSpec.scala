@@ -144,7 +144,7 @@ class RelationalSpec extends AnyFunSuite {
     // round budget pinned to six must read bit-equal
     val oracle = RelationalOps.partKcore(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val twin = RelationalOps.kcoreConverged(spark, sf, forcedRounds = 6)
+    val twin = RelationalOps.kcoreConverged(spark, sf, maxRounds = 6)
       .collect().map(_.toSeq).toSeq
     assert(oracle.nonEmpty && twin == oracle)
   }
@@ -164,7 +164,7 @@ class RelationalSpec extends AnyFunSuite {
   test("converged k-truss at 3 forced rounds == the unrolled oracle twin") {
     val oracle = RelationalOps.partKtruss(spark, sf)
       .collect().map(_.toSeq).toSeq
-    val twin = RelationalOps.ktrussConverged(spark, sf, forcedRounds = 3)
+    val twin = RelationalOps.ktrussConverged(spark, sf, maxRounds = 3)
       .collect().map(_.toSeq).toSeq
     assert(oracle.nonEmpty && twin == oracle)
   }
@@ -1076,7 +1076,20 @@ class RelationalSpec extends AnyFunSuite {
     def run() = RelationalOps.partHits(spark, sf).collect().map(r =>
       (r.getString(0), r.getAs[Number](1).longValue, r.getLong(2),
         r.getLong(3))).toSeq
-    def persisted() = { System.gc(); spark.sparkContext.getPersistentRDDs.size }
+    // the ContextCleaner drops unreferenced round checkpoints on its own
+    // thread some time after GC: read until three reads 500 ms apart
+    // agree (15 s cap)
+    def persisted() = {
+      def read() = { System.gc(); spark.sparkContext.getPersistentRDDs.size }
+      val deadline = System.nanoTime() + 15L * 1000000000L
+      var reads = List(read())
+      while ((reads.length < 3 || reads.take(3).distinct.length > 1) &&
+          System.nanoTime() < deadline) {
+        Thread.sleep(500)
+        reads = read() :: reads
+      }
+      reads.head
+    }
 
     SessionMemo.clear()
     val n0 = persisted()
